@@ -27,6 +27,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -38,10 +39,7 @@ from etl_finance_pipeline_spark.operators.gaps import repair_gaps
 from etl_finance_pipeline_spark.operators.normalize import normalize_df
 from etl_finance_pipeline_spark.operators.report import data_quality_report
 from etl_finance_pipeline_spark.operators.resample import resample_ohlc
-from etl_finance_pipeline_spark.sources.exporter import (
-    append_export_log,
-    write_parquet_with_metadata,
-)
+from etl_finance_pipeline_spark.sources.exporter import append_export_log, export_frame
 from etl_finance_pipeline_spark.sources.readers import load_directory
 
 
@@ -132,130 +130,96 @@ def run_pipeline(
     if cfg.performance.cache_normalized:
         # ≥2 actions read this frame (DQ collect + per-timeframe outputs);
         # the persisted layout keeps the symbol partitioning, so cached
-        # reuse skips both the recompute AND the exchange.
+        # reuse skips both the recompute AND the exchange. Released in
+        # `finally`, like each candle frame in emit(): a failed timeframe
+        # leaves no cached blocks behind.
         norm_df = norm_df.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        dq = data_quality_report(norm_df, ["SYMBOL"])
+        result.reports["data_quality"] = [r.asDict() for r in dq.collect()]
+        os.makedirs(cfg.paths.reports_path, exist_ok=True)
+        with open(os.path.join(cfg.paths.reports_path, "dq_report.json"), "w") as fh:
+            json.dump(result.reports["data_quality"], fh, indent=2, default=str)
 
-    dq = data_quality_report(norm_df, ["SYMBOL"])
-    result.reports["data_quality"] = [r.asDict() for r in dq.collect()]
-    os.makedirs(cfg.paths.reports_path, exist_ok=True)
-    with open(os.path.join(cfg.paths.reports_path, "dq_report.json"), "w") as fh:
-        json.dump(result.reports["data_quality"], fh, indent=2, default=str)
-
-    timeframes = cfg.resample.timeframes or []
-    plans: list[tuple[str, DataFrame]] = []
-    if not timeframes:
-        # raw path: repair at hardcoded 1T, no resample (run.py:150-190)
-        rep = repair_gaps(
-            norm_df,
-            "1T",
-            ["SYMBOL"],
-            use_ffill_for=cfg.gaps.use_ffill_for,
-            interpolate_prices=cfg.gaps.interpolate_prices,
-            short_gap_minutes=cfg.gaps.short_gap_minutes,
-        )
-        plans.append(("_raw", rep.df))
-    else:
-        for tf in timeframes:
-            rep = repair_gaps(
+        # no timeframes: one "_raw" output repaired at 1T, not resampled
+        # (run.py:150-190); else repair at each timeframe, then resample
+        timeframes = cfg.resample.timeframes or []
+        plans: list[tuple[str, DataFrame]] = []
+        for tf in timeframes or ["1T"]:
+            frame = repair_gaps(
                 norm_df,
                 tf,
                 ["SYMBOL"],
                 use_ffill_for=cfg.gaps.use_ffill_for,
                 interpolate_prices=cfg.gaps.interpolate_prices,
                 short_gap_minutes=cfg.gaps.short_gap_minutes,
-            )
-            res = resample_ohlc(
-                rep.df,
-                tf,
-                ["SYMBOL"],
-                drop_incomplete=cfg.resample.drop_incomplete,
-                extra_numeric_policy=cfg.resample.extra_numeric_policy,
-            )
-            plans.append((f"_{tf_label(tf)}", res))
+            ).df
+            if timeframes:
+                frame = resample_ohlc(
+                    frame,
+                    tf,
+                    ["SYMBOL"],
+                    drop_incomplete=cfg.resample.drop_incomplete,
+                    extra_numeric_policy=cfg.resample.extra_numeric_policy,
+                )
+            plans.append((f"_{tf_label(tf)}" if timeframes else "_raw", frame))
 
-    # The per-timeframe plans are INDEPENDENT jobs over the same
-    # (cached) normalized frame: overlap them so the next plan's tasks
-    # back-fill executors freed by the current plan's straggler tail
-    # (guide §2.6). Each emit() returns its export-log entry instead of
-    # writing it, and entries are appended in PLAN order after the pool
-    # joins — the log file stays deterministic across runs regardless
-    # of completion order (reports/outputs were already order-stable).
-    # The DQ collect above already materialized the normalized cache,
-    # so concurrent first-use cannot duplicate the upstream compute.
-    # Job descriptions are thread-local only under PySpark pinned-
-    # thread mode (PYSPARK_PIN_THREAD, default on since Spark 3.2);
-    # without it the labels may leak across concurrent jobs — a
-    # cosmetic UI effect only.
-    from concurrent.futures import ThreadPoolExecutor
+        # The per-timeframe plans are INDEPENDENT jobs over the same
+        # (cached) normalized frame: overlap them so the next plan's tasks
+        # back-fill executors freed by the current plan's straggler tail
+        # (guide §2.6). The DQ collect above already materialized the
+        # normalized cache, so concurrent first-use cannot duplicate the
+        # upstream compute. Job descriptions are thread-local only under
+        # PySpark pinned-thread mode (PYSPARK_PIN_THREAD, default on since
+        # Spark 3.2); without it the labels may leak across concurrent
+        # jobs — a cosmetic UI effect only.
+        def emit(suffix: str, frame: DataFrame) -> dict:
+            out_path = os.path.join(cfg.paths.processed_path, f"candles{suffix}")
+            spark.sparkContext.setJobDescription(f"pipeline: candles{suffix}")
+            if dry_run:
+                # full compute, no write — count() drives the plan
+                return {"rows": frame.count(), "would_write": out_path}
+            # the sink runs several actions over the candles (validation,
+            # write, content-hash head): compute them once
+            frame = frame.persist(StorageLevel.MEMORY_AND_DISK)
+            try:
+                entry = export_frame(
+                    frame, out_path, cfg.parquet, {"timeframe": suffix.lstrip("_")}
+                )
+            finally:
+                frame.unpersist()
+            log.info("export: wrote %s", out_path)
+            return entry
 
-    def emit(
-        suffix: str, frame: DataFrame
-    ) -> tuple[dict | None, str | None, dict | None]:
-        out_path = os.path.join(cfg.paths.processed_path, f"candles{suffix}")
-        spark.sparkContext.setJobDescription(f"pipeline: candles{suffix}")
-        if dry_run:
-            # full compute, no write — count() drives the plan
-            n = frame.count()
-            return {"rows": n, "would_write": out_path}, None, None
-        if cfg.parquet.transactional:
-            # commit-log sink: same validation, then an atomic append —
-            # a crashed run leaves no visible partial output and
-            # concurrent readers keep seeing the previous snapshot
-            from etl_finance_pipeline_spark.sources.exporter import (
-                derive_partition_columns,
-                validate_for_export,
-            )
-            from etl_finance_pipeline_spark.sources.table_format import write_table
-
-            validation = validate_for_export(frame)
-            out_frame, resolved = derive_partition_columns(
-                frame, cfg.parquet.partition_cols
-            )
-            snap = write_table(
-                out_frame, out_path, mode="append", partition_by=resolved
-            )
-            log_entry = {
-                "output": out_path,
-                "table_version": snap.version,
-                **validation,
-            }
-        else:
-            report = write_parquet_with_metadata(
-                frame,
-                out_path,
-                compression=cfg.parquet.compression,
-                partition_cols=cfg.parquet.partition_cols,
-                metadata={"timeframe": suffix.lstrip("_")},
-            )
-            log_entry = {"output": out_path, **report["validation"]}
-        log.info("export: wrote %s", out_path)
-        return None, out_path, log_entry
-
-    width = max(1, int(cfg.performance.overlap_timeframes))
-    if width == 1 or len(plans) == 1:
-        emitted = [emit(suffix, frame) for suffix, frame in plans]
-    else:
+        width = max(1, int(cfg.performance.overlap_timeframes))
         with ThreadPoolExecutor(max_workers=min(width, len(plans))) as pool:
             futures = [pool.submit(emit, s, f) for s, f in plans]
-            try:
-                emitted = [f.result() for f in futures]
-            except BaseException:
-                # one timeframe failed: stop dispatching the rest (in-
-                # flight siblings still finish — a non-transactional
-                # sink may leave their directories behind; the
-                # transactional sink leaves no visible partial output)
-                for f in futures:
-                    f.cancel()
-                raise
-    for (suffix, _), (dry_report, out_path, log_entry) in zip(plans, emitted):
-        if dry_report is not None:
-            result.reports[f"dry_run{suffix}"] = dry_report
-        if out_path is not None:
-            result.outputs.append(out_path)
-        if log_entry is not None:
-            append_export_log(cfg.paths.logs_path, log_entry)
-    if cfg.performance.cache_normalized:
-        norm_df.unpersist()
+            # one timeframe failed: stop dispatching the rest (in-flight
+            # siblings still finish — a non-transactional sink may leave
+            # their directories behind; the transactional sink leaves no
+            # visible partial output)
+            wait(futures, return_when=FIRST_EXCEPTION)
+            for f in futures:
+                f.cancel()
+        # Results land in PLAN order, so the export log is deterministic
+        # across runs; every write that committed is logged before the
+        # first failure is re-raised.
+        failure = None
+        for (suffix, _), f in zip(plans, futures):
+            if f.cancelled():
+                continue
+            if f.exception() is not None:
+                failure = failure or f.exception()
+            elif dry_run:
+                result.reports[f"dry_run{suffix}"] = f.result()
+            else:
+                result.outputs.append(f.result()["output"])
+                append_export_log(cfg.paths.logs_path, f.result())
+        if failure is not None:
+            raise failure
+    finally:
+        if cfg.performance.cache_normalized:
+            norm_df.unpersist()
     return result
 
 

@@ -8,8 +8,12 @@ Capability parity with /root/reference/src/etl/load/exporter.py
  * YEAR/MONTH partition columns derived with ``F.year``/``F.month``
    (exporter.py:94-125) → Hive-style partition pruning on read.
  * Content hash (exporter.py:76-91): sha256 over (row count, ts
-   min/max, head-3 of key columns) — one agg + a ``limit(3)`` collect,
-   O(1) driver data regardless of table size.
+   min/max, head-3 of key columns) — the count and span come from the
+   validation row, so hashing adds only a ``limit(3)`` collect, O(1)
+   driver data regardless of table size.
+ * One sink per frame (:func:`export_frame`): validate, derive the
+   partition columns and write once each. Every step is an action over
+   the frame it is handed; caching that frame is its owner's job.
  * Writer knobs for the 100 TB path: zstd, ``maxRecordsPerFile`` to
    bound file sizes, optional sort-within-partitions for time-ordered
    row groups (better scan locality + min/max pruning).
@@ -24,18 +28,19 @@ from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+from etl_finance_pipeline_spark.config import ParquetConfig
+from etl_finance_pipeline_spark.sources.table_format import write_table
 
 
-def validate_for_export(
-    df: DataFrame, ts_col: str = "TIMESTAMP", collect: bool = True
-) -> dict | DataFrame:
+def validate_for_export(df: DataFrame, ts_col: str = "TIMESTAMP") -> dict:
     """Export-time validation (P8/P9/A4/O3).
 
     Schema assertions raise; data sanity checks come back as one
     report row: row/duplicate counts, time span, negative prices,
     LOW > min(O,H,C), HIGH < max(O,L,C) violation flags
-    (exporter.py:26-71).
+    (exporter.py:26-71). Duplicates are repeated timestamps per
+    SYMBOL when the frame has one (O3), else repeated timestamps.
     """
     field = dict(df.dtypes).get(ts_col)
     if field is None:
@@ -44,11 +49,16 @@ def validate_for_export(
         raise ValueError(f"{ts_col!r} must be TimestampType, got {field}")
 
     cols = set(df.columns)
+    # rows with a stamp, less distinct (SYMBOL, stamp) keys; in a struct
+    # a NULL SYMBOL is still a key
+    key = F.struct(*[c for c in ("SYMBOL", ts_col) if c in cols])
     aggs = [
         F.count("*").alias("rows"),
         F.min(ts_col).alias("start"),
         F.max(ts_col).alias("end"),
-        (F.count(ts_col) - F.countDistinct(ts_col)).alias("duplicate_timestamps"),
+        (
+            F.count(ts_col) - F.countDistinct(F.when(F.col(ts_col).isNotNull(), key))
+        ).alias("duplicate_timestamps"),
     ]
     price_cols = [c for c in ("OPEN", "HIGH", "LOW", "CLOSE") if c in cols]
     for c in price_cols:
@@ -64,10 +74,7 @@ def validate_for_export(
                 (F.col("HIGH") < F.greatest("OPEN", "LOW", "CLOSE")).cast("int")
             ).alias("high_below_max")
         )
-    rep = df.agg(*aggs)
-    if not collect:
-        return rep
-    row = rep.collect()[0].asDict()
+    row = df.agg(*aggs).collect()[0].asDict()
     row["start"] = str(row["start"])
     row["end"] = str(row["end"])
     return row
@@ -97,16 +104,19 @@ def derive_partition_columns(
 def content_hash(df: DataFrame, key_cols: list[str], ts_col: str = "TIMESTAMP") -> str:
     """sha256 over (row count, ts min/max, head-3 of key columns) —
     cheap change-detection fingerprint (S10, exporter.py:76-91)."""
-    stats = df.agg(
-        F.count("*").alias("n"), F.min(ts_col).alias("lo"), F.max(ts_col).alias("hi")
-    ).collect()[0]
+    return _hash_validated(df, validate_for_export(df, ts_col), key_cols)
+
+
+def _hash_validated(df: DataFrame, validation: dict, key_cols: list[str]) -> str:
+    """:func:`content_hash` from *df*'s validation row: its ``rows``,
+    ``start`` and ``end`` are the hashed count and span."""
     present = [c for c in key_cols if c in df.columns]
     head = df.select(*present).limit(3).collect() if present else []
     payload = json.dumps(
         {
-            "rows": stats["n"],
-            "min": str(stats["lo"]),
-            "max": str(stats["hi"]),
+            "rows": validation["rows"],
+            "min": validation["start"],
+            "max": validation["end"],
             "head": [[str(v) for v in r] for r in head],
         },
         sort_keys=True,
@@ -151,7 +161,7 @@ def write_parquet_with_metadata(
             "path": out_path,
             "compression": compression,
             "partition_cols": resolved,
-            "content_hash": content_hash(df, [ts_col, "SYMBOL"], ts_col),
+            "content_hash": _hash_validated(df, report["validation"], [ts_col, "SYMBOL"]),
             "exported_at": datetime.now(timezone.utc).isoformat(),
             "user_metadata": metadata or {},
         }
@@ -159,6 +169,28 @@ def write_parquet_with_metadata(
     with open(out_path.rstrip("/") + ".meta.json", "w") as fh:
         json.dump(report, fh, indent=2, default=str)
     return report
+
+
+def export_frame(
+    df: DataFrame, out_path: str, parquet: ParquetConfig, metadata: dict | None = None
+) -> dict:
+    """The pipeline's sink, shared by both output formats: validate
+    once, derive the partition columns once, then append atomically to
+    the commit-log table (``parquet.transactional``) or write plain
+    Parquet with its sidecar. Returns the export-log entry."""
+    if not parquet.transactional:
+        report = write_parquet_with_metadata(
+            df,
+            out_path,
+            compression=parquet.compression,
+            partition_cols=parquet.partition_cols,
+            metadata=metadata,
+        )
+        return {"output": out_path, **report["validation"]}
+    validation = validate_for_export(df)
+    out, resolved = derive_partition_columns(df, parquet.partition_cols)
+    snap = write_table(out, out_path, mode="append", partition_by=resolved)
+    return {"output": out_path, "table_version": snap.version, **validation}
 
 
 def overwrite_partitions(

@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from etl_finance_pipeline_spark.sources.tables import load_table
+
 SUPPORTED_EXTENSIONS = {
     ".csv": "csv",
     ".parquet": "parquet",
@@ -155,8 +157,10 @@ def read_json(
 def read_parquet(
     spark: SparkSession, paths: str | list[str], with_source_file: bool = True
 ) -> DataFrame:
-    """Parquet source (S4)."""
-    df = spark.read.parquet(*([paths] if isinstance(paths, str) else paths))
+    """Parquet source (S4). Nanosecond stamps (pandas' default) become
+    TimestampType and TIMESTAMP_NTZ becomes TIMESTAMP, as in
+    :func:`~etl_finance_pipeline_spark.sources.tables.load_table`."""
+    df = load_table(spark, paths)
     if with_source_file:
         df = df.withColumn("_source_file", F.input_file_name())
     return df
@@ -247,7 +251,11 @@ def load_directory(
             for f in files:
                 try:
                     one = readers[fmt](f)
-                    result.frames.setdefault(fmt, one)
                 except Exception:
                     result.quarantined_files.append({"file": f, "reason": str(exc)})
+                    continue
+                prev = result.frames.get(fmt)
+                result.frames[fmt] = (
+                    one if prev is None else prev.unionByName(one, allowMissingColumns=True)
+                )
     return result

@@ -30,23 +30,39 @@ TABLE_NAMES = (
 )
 
 
-def _nanos_timestamp_columns(path: str) -> list[str]:
-    """Column names stored as TIMESTAMP(NANOS) in the parquet footer."""
-    import pyarrow.parquet as pq
-    import pyarrow as pa
-
-    probe = path
+def _parquet_files(path: str) -> list[str]:
     if os.path.isdir(path):
-        inner = sorted(glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True))
-        if not inner:
-            return []
-        probe = inner[0]
-    schema = pq.ParquetFile(probe).schema_arrow
-    return [
-        f.name
-        for f in schema
-        if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
-    ]
+        return sorted(glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True))
+    return [path] if os.path.isfile(path) else []  # a glob or remote URI: not probed
+
+
+def _timestamp_units(path: str) -> dict[str, str]:
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    schema = pq.ParquetFile(path).schema_arrow
+    return {f.name: f.type.unit for f in schema if pa.types.is_timestamp(f.type)}
+
+
+def _nanos_timestamp_columns(paths: list[str]) -> list[str]:
+    """Column names stored as TIMESTAMP(NANOS) in the parquet footers.
+
+    The first file's footer decides. When it has such columns, every
+    other file must store them in nanoseconds too: Spark reads a column
+    with one type for all files, so converting epoch-nanos would rescale
+    another unit's values. A mix raises ValueError."""
+    files = [f for p in paths for f in _parquet_files(p)]
+    if not files:
+        return []
+    nanos = [c for c, unit in _timestamp_units(files[0]).items() if unit == "ns"]
+    for f in files[1:] if nanos else []:
+        units = _timestamp_units(f)
+        other = [c for c in nanos if units.get(c, "ns") != "ns"]
+        if other:
+            raise ValueError(
+                f"{f} stores {other} in another unit; {files[0]} stores them in nanoseconds"
+            )
+    return nanos
 
 
 def ensure_nanos_conf(spark: SparkSession) -> None:
@@ -60,14 +76,16 @@ def ensure_nanos_conf(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
 
-def load_table(spark: SparkSession, path: str) -> DataFrame:
-    """Read a parquet table, restoring nanosecond-timestamp columns to
-    TimestampType (truncated to micros, Spark's native resolution).
-    Works on any session — arms the nanos conf itself."""
+def load_table(spark: SparkSession, path: str | list[str]) -> DataFrame:
+    """Read a parquet table (one path or several), restoring
+    nanosecond-timestamp columns to TimestampType (truncated to micros,
+    Spark's native resolution). Works on any session — arms the nanos
+    conf itself."""
+    paths = [path] if isinstance(path, str) else list(path)
     ensure_nanos_conf(spark)
-    df = spark.read.parquet(path)
+    df = spark.read.parquet(*paths)
     dtypes = dict(df.dtypes)
-    for c in _nanos_timestamp_columns(path):
+    for c in _nanos_timestamp_columns(paths):
         # Convert only when Spark actually surfaced the column as an
         # epoch-nanos long: INT96 timestamps also show as timestamp[ns]
         # in the arrow footer but Spark reads them as TIMESTAMP already.

@@ -248,6 +248,56 @@ def test_pipeline_transactional_sink(spark, tmp_path):
     assert '"table_version": 0' in log[0] and '"table_version": 1' in log[1]
 
 
+def _fail_write_of(monkeypatch, name):
+    """Make every plain Parquet write to a path ending in *name* raise."""
+    from pyspark.sql import DataFrameWriter
+
+    real = DataFrameWriter.parquet
+
+    def parquet(self, path, *args, **kwargs):
+        if str(path).rstrip("/").endswith(name):
+            raise RuntimeError(f"injected write failure: {name}")
+        return real(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+
+
+@pytest.mark.parametrize("overlap", [1, 3])
+def test_run_pipeline_logs_committed_writes_when_a_timeframe_fails(
+    spark, tmp_path, monkeypatch, overlap
+):
+    """A timeframe whose write raises must not cost its sibling's
+    committed write its export-log line; the failure still propagates."""
+    _write_raw(tmp_path)
+    cfg = _cfg(tmp_path, ["1T", "5T"])
+    cfg.performance.overlap_timeframes = overlap
+    _fail_write_of(monkeypatch, "candles_5m")
+    with pytest.raises(RuntimeError, match="injected write failure"):
+        run_pipeline(spark, cfg, dry_run=False)
+    log = (tmp_path / "logs" / "export_log.ndjson").read_text().splitlines()
+    entries = [json.loads(line) for line in log]
+    assert [os.path.basename(e["output"]) for e in entries] == ["candles_1m"]
+    assert entries[0]["rows"] == 6
+    assert os.path.exists(str(tmp_path / "processed" / "candles_1m") + ".meta.json")
+
+
+def test_run_pipeline_releases_caches_on_failure(spark, tmp_path, monkeypatch):
+    """The normalized frame and every candle frame are unpersisted when
+    a timeframe fails, not only on success."""
+    _write_raw(tmp_path)
+    cfg = _cfg(tmp_path, ["1T", "5T"])
+    _fail_write_of(monkeypatch, "candles_5m")
+    cached = spark.sparkContext._jsc.getPersistentRDDs
+    before = cached().size()
+    with pytest.raises(RuntimeError, match="injected write failure"):
+        run_pipeline(spark, cfg, dry_run=False)
+    assert cached().size() == before
+    # and on success
+    monkeypatch.undo()
+    run_pipeline(spark, cfg, dry_run=False)
+    assert cached().size() == before
+
+
 def test_rotating_logger(tmp_path):
     """Reference-parity ops logging (logger.py:11-27): console + size-
     rotated file handler, idempotent per name, no import side effects."""

@@ -12,6 +12,7 @@ from etl_finance_pipeline_spark.sources.readers import (
     detect_file_type,
     load_directory,
     read_csv,
+    read_parquet,
     split_quarantine,
 )
 
@@ -87,6 +88,49 @@ def test_load_directory_mixed(spark, tmp_path):
     assert [q["file"] for q in res.quarantined_files] == [str(tmp_path / "skip.xlsx")]
     statuses = {m["format"]: m["status"] for m in res.metadata}
     assert statuses.get("csv") == "ok"
+
+
+def test_read_parquet_pandas_nanosecond_stamps(spark, tmp_path):
+    """A ``pandas.to_parquet`` file stores nanosecond stamps; the reader
+    returns them as TimestampType with the same instants, not as the
+    epoch-nanosecond integers Spark surfaces under nanosAsLong."""
+    import pandas as pd
+
+    stamps = pd.date_range("2024-01-02 09:00", periods=3, freq="min", tz="UTC")
+    pdf = pd.DataFrame({"time": stamps, "close": [1.0, 1.1, 1.2]})
+    path = str(tmp_path / "EURUSD_1m.parquet")
+    pdf.to_parquet(path)
+
+    df = read_parquet(spark, path)
+    assert dict(df.dtypes)["time"] == "timestamp"
+    got = sorted(r["time"] for r in df.collect())
+    assert [pd.Timestamp(t, tz="UTC") for t in got] == list(stamps)
+    # the directory scan goes through the same reader
+    res = load_directory(spark, str(tmp_path))
+    assert dict(res.frames["parquet"].dtypes)["time"] == "timestamp"
+
+
+def test_load_directory_nanosecond_file_before_microsecond_file(spark, tmp_path):
+    """A nanosecond file sorted before a microsecond one: the group read
+    refuses to rescale the microsecond stamps, and the per-file fallback
+    keeps both files with the right instants."""
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    stamps = pd.date_range("2024-01-02 09:00", periods=2, freq="min", tz="UTC")
+    pdf = pd.DataFrame({"time": stamps, "close": [1.0, 1.1]})
+    pdf.to_parquet(str(tmp_path / "A_1m.parquet"))
+    pq.write_table(
+        pa.Table.from_pandas(pdf), str(tmp_path / "B_1m.parquet"), coerce_timestamps="us"
+    )
+    with pytest.raises(ValueError, match="nanoseconds"):
+        read_parquet(spark, [str(tmp_path / "A_1m.parquet"), str(tmp_path / "B_1m.parquet")])
+
+    res = load_directory(spark, str(tmp_path))
+    assert res.quarantined_files == []
+    got = [pd.Timestamp(r["time"], tz="UTC") for r in res.frames["parquet"].collect()]
+    assert sorted(got) == sorted(list(stamps) * 2)
 
 
 def test_read_json_with_corrupt_rows(spark, tmp_path):

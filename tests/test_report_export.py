@@ -84,6 +84,16 @@ def test_validate_for_export_flags(spark):
     assert rep["low_above_min"] == 1
     assert rep["high_below_max"] == 0
     assert rep["negative_OPEN"] == 0
+    assert rep["duplicate_timestamps"] == 0
+
+    # two symbols on the same stamps are not duplicates; a repeated
+    # (SYMBOL, TIMESTAMP) pair is
+    pair = _candles(spark, 5).unionByName(_candles(spark, 5, sym="Y"))
+    assert validate_for_export(pair)["duplicate_timestamps"] == 0
+    repeated = pair.unionByName(_candles(spark, 2, sym="Y"))
+    assert validate_for_export(repeated)["duplicate_timestamps"] == 2
+    # without SYMBOL every repeated stamp counts
+    assert validate_for_export(pair.drop("SYMBOL"))["duplicate_timestamps"] == 5
 
 
 def test_validate_requires_timestamp_type(spark):
@@ -115,6 +125,7 @@ def test_write_parquet_roundtrip(spark, tmp_path):
     assert meta["validation"]["rows"] == 20
     assert meta["user_metadata"] == {"tf": "5m"}
     assert rep["content_hash"] == meta["content_hash"]
+    assert meta["content_hash"] == content_hash(df, ["TIMESTAMP", "SYMBOL"])
     # roundtrip preserves data
     back = spark.read.parquet(out)
     assert back.count() == 20
